@@ -59,12 +59,20 @@ therefore folds only the core tables + state (all O(batch + affected))
 and :func:`refresh_derived_tables` re-derives the rollups on a cadence —
 at any refresh point the stored graph equals the full rebuild exactly.
 
-Storage protocol: updated tables are written to a staging dir and swapped
-in with an atomic directory rename (the lazily-read old table must never
-be overwritten mid-read; a cluster deployment uses a transactional table
-format or the HDFS rename for the same reason). State lives under
-``out_dir`` next to the stage tables: ``entity_blocks`` (vocabulary-scale)
-``entity_titles`` and ``entity_degrees`` (entity-scale)."""
+Storage protocol: :func:`write_graph_tables` is the one write path for
+every table under ``out_dir`` — the full build, the fold, the rollup and
+the state init all call it. ``TABLE_WRITERS`` fixes each table's on-disk
+layout. Every table is first written to a ``__staging`` sibling, all of
+them concurrently with the builds they wait on (``session.concurrent_jobs``);
+only after EVERY staged write has succeeded is each one swapped in with an
+atomic directory rename — whole, or, for the fold's sparse regime, only its
+affected ``bucket=`` partitions. The lazily-read old table must never be
+overwritten mid-read, and a failure anywhere leaves every stored table at
+its previous state with no job still running (a cluster deployment uses a
+transactional table format or the HDFS rename for the same reason). State
+lives under ``out_dir`` next to the stage tables: ``entity_blocks``
+(vocabulary-scale) ``entity_titles`` and ``entity_degrees``
+(entity-scale)."""
 
 from __future__ import annotations
 
@@ -93,7 +101,6 @@ from deep_reason_spark.operators.graph import (
     widen_degree_affected,
 )
 from deep_reason_spark.operators.linking import build_surface_map
-from deep_reason_spark.operators.ontology import build_ontology
 from deep_reason_spark.plans.kg_pipeline import (
     COMMUNITIES_DIR,
     N_BUCKETS,
@@ -106,15 +113,56 @@ from deep_reason_spark.plans.kg_pipeline import (
     ONTOLOGY_CONNECTIONS_DIR,
     ONTOLOGY_NODES_DIR,
     ONTOLOGY_RELATIONS_DIR,
-    build_community_tables,
     canonical_entity_types,
-    kg_nodes_table,
-    kg_triplets_table,
+    derived_table_thunks,
 )
+from deep_reason_spark.session import concurrent_jobs
+from deep_reason_spark.sources.checkpoint import write_partitioned
 
 BLOCKS_DIR = "entity_blocks"
 TITLES_DIR = "entity_titles"
 DEGREES_DIR = "entity_degrees"
+
+
+def _plain(df: DataFrame, path: str) -> None:
+    df.write.mode("overwrite").parquet(path)
+
+
+def _vocab(df: DataFrame, path: str) -> None:
+    # vocabulary-scale by construction: the full shuffle-partition fan-out
+    # would cost `spark.sql.shuffle.partitions` near-empty tasks + files
+    # per table, pure commit latency at every scale (r4 scaling)
+    df.coalesce(1).write.mode("overwrite").parquet(path)
+
+
+def _bucketed(key: str):
+    # the two corpus-scale tables hash-partition on their key into
+    # N_BUCKETS `bucket=` dirs (read at call time), which the fold's
+    # partition-pruned writes rely on
+    def write(df: DataFrame, path: str) -> None:
+        write_partitioned(df.withColumn(
+            "bucket", F.pmod(F.xxhash64(key), F.lit(N_BUCKETS)).cast("int")),
+            path)
+    return write
+
+
+# the on-disk layout of every table under out_dir, decided once
+TABLE_WRITERS = {
+    MAPPING_DIR: _plain,
+    NODES_DIR: _bucketed("id"),
+    EDGES_DIR: _bucketed("source"),
+    ONTOLOGY_NODES_DIR: _vocab,
+    ONTOLOGY_RELATIONS_DIR: _vocab,
+    ONTOLOGY_CONNECTIONS_DIR: _vocab,
+    KG_NODES_DIR: _plain,
+    KG_TRIPLETS_DIR: _plain,
+    COMMUNITIES_DIR: _plain,
+    COMMUNITY_REPORTS_DIR: _plain,
+    BLOCKS_DIR: _vocab,
+    TITLES_DIR: _plain,
+    DEGREES_DIR: _plain,
+}
+
 # Incremental-state manifest (VERDICT r5 "What's wrong" #1): the stored
 # graph's bucket layout is a function of N_BUCKETS at BUILD time, and the
 # fold's affected-bucket routing + partition-pruned swaps silently corrupt
@@ -192,8 +240,6 @@ def init_incremental_state(
     state tables. Call once after the initial full build."""
     sm = build_surface_map(triples, alias_dict).localCheckpoint()
     ids, _, blocks = _ids_blocks_titles(sm)
-    blocks.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(out_dir, BLOCKS_DIR))
     mapping = spark.read.parquet(os.path.join(out_dir, MAPPING_DIR))
     titles = (
         ids.join(broadcast_if_small(mapping), "entity_id")
@@ -201,15 +247,15 @@ def init_incremental_state(
         .agg(longest_name("canonical_name")
              .alias("title"))
     )
-    titles.write.mode("overwrite").parquet(os.path.join(out_dir, TITLES_DIR))
     # degree state (node → distinct undirected neighbors): lets updates
     # maintain combined_degree for O(degree-affected) rows instead of the
     # two full-edge-table shuffle joins add_combined_degree costs
-    degrees_from_edges(
-        spark.read.parquet(os.path.join(out_dir, EDGES_DIR))
-    ).write.mode("overwrite").parquet(os.path.join(out_dir, DEGREES_DIR))
+    degrees = degrees_from_edges(
+        spark.read.parquet(os.path.join(out_dir, EDGES_DIR)))
+    write_graph_tables(spark, out_dir, lambda submit: {
+        BLOCKS_DIR: lambda: blocks, TITLES_DIR: lambda: titles,
+        DEGREES_DIR: lambda: degrees})
     _write_state_manifest(out_dir)
-    bump_estimate_epoch()
 
 
 def _stage(df: DataFrame, path: str, writer) -> None:
@@ -262,6 +308,31 @@ def _swap_in_buckets(path: str, buckets: list[int]) -> None:
     shutil.rmtree(staging, ignore_errors=True)
 
 
+def write_graph_tables(spark: SparkSession, out_dir: str, build,
+                       pruned: dict[str, list[int]] | None = None) -> None:
+    """Stage every table, then swap all in. ``build(submit)`` submits its
+    side builds through ``submit`` (``session.concurrent_jobs``) and returns
+    ``{dir: thunk}``; each thunk's frame is staged on its own thread, so the
+    independent writes start at once while the others wait on their builds.
+    Only after every build and staged write has finished without error is
+    each table swapped in: ``pruned[dir]`` lists the ``bucket=`` partitions
+    to promote, any other table is replaced whole. A failure raises with no
+    table swapped and no job left running."""
+    pruned = pruned or {}
+    with concurrent_jobs(spark) as submit:
+        tables = build(submit)
+        for dir_, thunk in tables.items():
+            submit(lambda t=thunk, d=dir_: _stage(
+                t(), os.path.join(out_dir, d), TABLE_WRITERS[d]))
+    for dir_ in tables:
+        path = os.path.join(out_dir, dir_)
+        if dir_ in pruned:
+            _swap_in_buckets(path, pruned[dir_])
+        else:
+            _swap_in(path)
+    bump_estimate_epoch()
+
+
 def run_incremental_kg_update(
     spark: SparkSession,
     new_triples: DataFrame,
@@ -295,8 +366,6 @@ def run_incremental_kg_update(
     tables diverge from a full rebuild by design. ``wall_ms`` (optional
     dict) receives per-phase laps keyed ``inc.<phase>``."""
     import time
-
-    from deep_reason_spark.sources.checkpoint import write_partitioned
 
     _validate_state_manifest(out_dir)
     _last = [time.monotonic()]
@@ -460,7 +529,7 @@ def run_incremental_kg_update(
         new_degrees = degrees_from_edges(edge_agg).localCheckpoint()
         edges_staged = decorate_combined_degree(edge_agg, new_degrees)
         _lap("degrees")
-        edge_buckets = node_buckets = list(range(N_BUCKETS))
+        pruned = None  # every table is replaced whole
         _lap("buckets")
     else:
         pass_rows, touched = incremental_edge_update(
@@ -502,7 +571,7 @@ def run_incremental_kg_update(
             .select("bucket").distinct().collect()
         }
         edge_buckets = sorted(d_buckets | tgt_buckets)
-        node_buckets = sorted(d_buckets)
+        pruned = {EDGES_DIR: edge_buckets, NODES_DIR: sorted(d_buckets)}
         edges_staged = (
             pass_rows.where(F.col("bucket").isin(edge_buckets)).drop("bucket")
             .unionByName(touched_out)
@@ -512,38 +581,11 @@ def run_incremental_kg_update(
     # ---- derived tables: SHARED builders over the pinned edge_agg ----------
     # communities / ontology / KgStructure / nodes all derive from the
     # updated edge aggregate + titles + types at EDGE scale — never a
-    # corpus rescan — via the exact builder functions run_graph_stage
-    # writes with, so each refreshed table equals its full-rebuild twin.
-    # Like the full stage, the three builds overlap in their own FAIR
-    # scheduler pools (the update is fixed-latency-bound at this layer;
-    # jobs within one pool are FIFO, pools are fair against each other).
+    # corpus rescan — via the exact builders run_graph_stage writes with
+    # (kg_pipeline.derived_table_thunks), so each refreshed table equals
+    # its full-rebuild twin.
     canonical_types = canonical_entity_types(spark, new_mapping, entity_types)
-    ctypes = canonical_types.withColumnRenamed("canonical_id", "entity_id")
-    edge_pairs = edge_agg.select(
-        F.col("source").alias("subject_id"),
-        F.col("target").alias("object_id"),
-        F.col("description").alias("predicate"),
-    )
 
-    def _pooled(pool: str, fn):
-        def run():
-            spark.sparkContext.setLocalProperty("spark.scheduler.pool", pool)
-            return fn()
-        return run
-
-    def _onto_cp():
-        onodes_, orels_, oconns_ = build_ontology(edge_pairs, ctypes)
-        return onodes_, orels_.localCheckpoint(), oconns_
-
-    from concurrent.futures import ThreadPoolExecutor
-
-    build_pool = ThreadPoolExecutor(max_workers=3)
-    fut_comm = fut_onto = None
-    if refresh_derived:
-        fut_comm = build_pool.submit(_pooled("cc", lambda: build_community_tables(
-            edge_agg, min_weight=community_min_weight,
-            max_degree=community_max_degree, salt=salt)))
-        fut_onto = build_pool.submit(_pooled("ontology", _onto_cp))
     # node rows can change ONLY for ids in D (frequency/degree/description
     # aggregate incident edges — all routed into `touched` for D-nodes;
     # titles/types change only inside D by construction), so the sparse
@@ -562,29 +604,17 @@ def run_incremental_kg_update(
                   "id")
             .localCheckpoint())
 
-    fut_nodes = build_pool.submit(_pooled("nodes", _node_build))
-    _lap("builds")  # submission only — the build futures resolve under
-    # the write wave, so their wall rides in inc.writes (BASELINE.md
-    # "builds (submission)" row; same reading rule as graph.builds)
-
-    def _nodes_keep(pruned: bool):
-        keep = old_nodes.where(F.col("bucket").isin(node_buckets)) \
-            if pruned else old_nodes
+    def _nodes(fut_nodes, bucket_pruned: bool):
+        # sparse: stored bulk ∪ dirty rows — only the pruned partitions for
+        # the staged table, the full view for the entity-scale kg_nodes
+        # projection, which is not bucket-stored
+        if dense:
+            return fut_nodes.result()
+        keep = old_nodes.where(F.col("bucket").isin(pruned[NODES_DIR])) \
+            if bucket_pruned else old_nodes
         return keep.drop("bucket").join(
             broadcast_if_small(affected.withColumnRenamed("aid", "id")),
-            "id", "left_anti")
-
-    def _nodes_staged():
-        if dense:
-            return fut_nodes.result()
-        return _nodes_keep(pruned=True).unionByName(fut_nodes.result())
-
-    def _full_nodes():
-        # lazy full view (stored bulk ∪ dirty) for the entity-scale
-        # kg_nodes projection, which is not bucket-stored
-        if dense:
-            return fut_nodes.result()
-        return _nodes_keep(pruned=False).unionByName(fut_nodes.result())
+            "id", "left_anti").unionByName(fut_nodes.result())
 
     # ---- blocks state: min is associative ----------------------------------
     merged_blocks = (
@@ -592,75 +622,33 @@ def run_incremental_kg_update(
         .groupBy("blk").agg(F.min("rep").alias("rep"))
     )
 
-    # ---- stage every table, then swap all in --------------------------------
-    def plain(df, path):
-        df.write.mode("overwrite").parquet(path)
+    def _tables(submit) -> dict:
+        fut_nodes = submit(_node_build, pool="nodes")
+        tables = {
+            MAPPING_DIR: lambda: new_mapping,
+            BLOCKS_DIR: lambda: merged_blocks,
+            TITLES_DIR: lambda: new_titles,
+            DEGREES_DIR: lambda: new_degrees,
+            EDGES_DIR: lambda: edges_staged,
+            NODES_DIR: lambda: _nodes(fut_nodes, bucket_pruned=True),
+        }
+        if refresh_derived:
+            tables.update(derived_table_thunks(
+                submit, edge_agg, canonical_types,
+                lambda: _nodes(fut_nodes, bucket_pruned=False), salt=salt,
+                community_min_weight=community_min_weight,
+                community_max_degree=community_max_degree))
+        # submission only: the builds resolve under the write wave, so
+        # their wall rides in inc.writes (BASELINE.md "builds (submission)")
+        _lap("builds")
+        return tables
 
-    def vocab(df, path):
-        df.coalesce(1).write.mode("overwrite").parquet(path)
-
-    def bucketed(key):
-        def w(df, path):
-            write_partitioned(
-                df.withColumn("bucket",
-                              F.pmod(F.xxhash64(key), F.lit(N_BUCKETS)).cast("int")),
-                path)
-        return w
-
-    # every table is ready or riding a build future — stage all twelve
-    # CONCURRENTLY, the graph stage's write-wave pattern (job submission is
-    # thread-safe; the r5 profile showed a serial write chain costing ~7 s
-    # of fixed commit latency per update). Thunks, not frames: the
-    # independent writes (mapping, blocks, titles, edges) start immediately
-    # while the build futures resolve under the wave.
-    wave = [
-        (lambda: new_mapping, MAPPING_DIR, plain),
-        (lambda: merged_blocks, BLOCKS_DIR, vocab),
-        (lambda: new_titles, TITLES_DIR, plain),
-        (lambda: new_degrees, DEGREES_DIR, plain),
-        (lambda: edges_staged, EDGES_DIR, bucketed("source")),
-        (lambda: _nodes_staged(), NODES_DIR, bucketed("id")),
-    ]
-    if refresh_derived:
-        wave += [
-            (lambda: fut_onto.result()[0], ONTOLOGY_NODES_DIR, vocab),
-            (lambda: fut_onto.result()[1], ONTOLOGY_RELATIONS_DIR, vocab),
-            (lambda: fut_onto.result()[2], ONTOLOGY_CONNECTIONS_DIR, vocab),
-            (lambda: kg_nodes_table(_full_nodes()), KG_NODES_DIR, plain),
-            (lambda: kg_triplets_table(edge_pairs, ctypes,
-                                       fut_onto.result()[1]),
-             KG_TRIPLETS_DIR, plain),
-            (lambda: fut_comm.result()[0], COMMUNITIES_DIR, plain),
-            (lambda: fut_comm.result()[1], COMMUNITY_REPORTS_DIR, plain),
-        ]
-    # edges/nodes promote per affected bucket partition; the rest per table
-    pruned_swaps = {EDGES_DIR: edge_buckets, NODES_DIR: node_buckets}
-    swap_dirs = [dir_ for _t, dir_, _w in wave if dir_ not in pruned_swaps]
-    try:
-        with ThreadPoolExecutor(max_workers=len(wave)) as side:
-            futs = [
-                side.submit(
-                    lambda t=thunk, p=os.path.join(out_dir, dir_), w=w_:
-                    _stage(t(), p, w))
-                for thunk, dir_, w_ in wave
-            ]
-            for f in futs:
-                f.result()
-    except BaseException:
-        # a failed staging write must not leave build threads running
-        # Spark jobs after this function has raised (same contract as
-        # run_graph_stage, ADVICE r4) — and no table is swapped in, so
-        # the stored graph stays the pre-update state
-        build_pool.shutdown(wait=True, cancel_futures=True)
-        raise
-    else:
-        build_pool.shutdown(wait=False)
+    # every table is ready or riding a build future — stage all of them
+    # CONCURRENTLY (the r5 profile showed a serial write chain costing ~7 s
+    # of fixed commit latency per update), then swap: edges/nodes per
+    # affected bucket partition in the sparse regime, the rest per table
+    write_graph_tables(spark, out_dir, _tables, pruned)
     _lap("writes")
-    for dir_ in swap_dirs:
-        _swap_in(os.path.join(out_dir, dir_))
-    for dir_, buckets in pruned_swaps.items():
-        _swap_in_buckets(os.path.join(out_dir, dir_), buckets)
-    bump_estimate_epoch()
     return (
         spark.read.parquet(os.path.join(out_dir, NODES_DIR)).drop("bucket"),
         spark.read.parquet(os.path.join(out_dir, EDGES_DIR)).drop("bucket"),
@@ -685,68 +673,13 @@ def refresh_derived_tables(
     are global); per-batch maintenance of these is the cost this function
     moves OFF the fold path. ``salt``/``entity_types``/``community_*``
     must match the values the graph was built with."""
-    from concurrent.futures import ThreadPoolExecutor
-
     edge_agg = spark.read.parquet(os.path.join(out_dir, EDGES_DIR)).select(
         "id", "human_readable_id", "source", "target", "description",
         "weight", "text_unit_ids")
     nodes = spark.read.parquet(os.path.join(out_dir, NODES_DIR)).drop("bucket")
     mapping = spark.read.parquet(os.path.join(out_dir, MAPPING_DIR))
     canonical_types = canonical_entity_types(spark, mapping, entity_types)
-    ctypes = canonical_types.withColumnRenamed("canonical_id", "entity_id")
-    edge_pairs = edge_agg.select(
-        F.col("source").alias("subject_id"),
-        F.col("target").alias("object_id"),
-        F.col("description").alias("predicate"),
-    )
-
-    def _pooled(pool: str, fn):
-        def run():
-            spark.sparkContext.setLocalProperty("spark.scheduler.pool", pool)
-            return fn()
-        return run
-
-    def _onto_cp():
-        onodes_, orels_, oconns_ = build_ontology(edge_pairs, ctypes)
-        return onodes_, orels_.localCheckpoint(), oconns_
-
-    build_pool = ThreadPoolExecutor(max_workers=2)
-    fut_comm = build_pool.submit(_pooled("cc", lambda: build_community_tables(
-        edge_agg, min_weight=community_min_weight,
-        max_degree=community_max_degree, salt=salt)))
-    fut_onto = build_pool.submit(_pooled("ontology", _onto_cp))
-
-    def plain(df, path):
-        df.write.mode("overwrite").parquet(path)
-
-    def vocab(df, path):
-        df.coalesce(1).write.mode("overwrite").parquet(path)
-
-    wave = [
-        (lambda: fut_onto.result()[0], ONTOLOGY_NODES_DIR, vocab),
-        (lambda: fut_onto.result()[1], ONTOLOGY_RELATIONS_DIR, vocab),
-        (lambda: fut_onto.result()[2], ONTOLOGY_CONNECTIONS_DIR, vocab),
-        (lambda: kg_nodes_table(nodes), KG_NODES_DIR, plain),
-        (lambda: kg_triplets_table(edge_pairs, ctypes, fut_onto.result()[1]),
-         KG_TRIPLETS_DIR, plain),
-        (lambda: fut_comm.result()[0], COMMUNITIES_DIR, plain),
-        (lambda: fut_comm.result()[1], COMMUNITY_REPORTS_DIR, plain),
-    ]
-    try:
-        with ThreadPoolExecutor(max_workers=len(wave)) as side:
-            futs = [
-                side.submit(
-                    lambda t=thunk, p=os.path.join(out_dir, dir_), w=w_:
-                    _stage(t(), p, w))
-                for thunk, dir_, w_ in wave
-            ]
-            for f in futs:
-                f.result()
-    except BaseException:
-        build_pool.shutdown(wait=True, cancel_futures=True)
-        raise
-    else:
-        build_pool.shutdown(wait=False)
-    for _t, dir_, _w in wave:
-        _swap_in(os.path.join(out_dir, dir_))
-    bump_estimate_epoch()
+    write_graph_tables(spark, out_dir, lambda submit: derived_table_thunks(
+        submit, edge_agg, canonical_types, lambda: nodes, salt=salt,
+        community_min_weight=community_min_weight,
+        community_max_degree=community_max_degree))

@@ -25,9 +25,7 @@ failed rows and logs, ``kg_agent/chains.py:286-292,377-387``).
 from __future__ import annotations
 
 import os
-import threading
 import time
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -44,6 +42,7 @@ from deep_reason_spark.operators.graph import (
 )
 from deep_reason_spark.operators.linking import build_surface_map
 from deep_reason_spark.operators.ontology import attach_types, build_ontology
+from deep_reason_spark.session import concurrent_jobs
 from deep_reason_spark.sources.checkpoint import (
     CheckpointLedger,
     bucket_col,
@@ -149,8 +148,9 @@ def run_triples_stage(
     # the full hash rows are not consumed until the ledger commit AFTER the
     # main write — serialized, the worklist job was ~1 s of pure pre-write
     # latency at the bench corpus (guide §2.6 overlap independent jobs).
+    # Leaving the helper joins it, so its failure surfaces even when the
+    # worklist is empty and nobody reads the result.
     def _collect_work() -> dict:
-        spark.sparkContext.setLocalProperty("spark.scheduler.pool", "worklist")
         return {
             r["bucket"]: (r["n"], f"{r['h']}:{r['n']}")
             for r in todo_files.groupBy("bucket").agg(
@@ -160,57 +160,48 @@ def run_triples_stage(
             ).collect()
         }
 
-    work_pool = ThreadPoolExecutor(max_workers=1)
-    work_fut = work_pool.submit(_collect_work)
-    try:
+    with concurrent_jobs(spark) as submit:
+        work_fut = submit(_collect_work, pool="worklist")
         n_files_todo = todo_files.count()
-    except BaseException:
-        work_pool.shutdown(wait=True, cancel_futures=True)
-        raise
-    if n_files_todo:
-        # ONE shuffle for the whole extraction path: raw file rows move to
-        # their checkpoint bucket; chunking (intra-row arrays), extraction
-        # (mapInPandas) and the partitioned write all preserve it.
-        # The path-salt keeps a hub repo's bucket from becoming a straggler
-        # task (≤ WRITE_SALT tasks and files per bucket).
-        # Output-file discipline: one file per (bucket, salt) key requires
-        # partitions == keys (hash-partitioning over fewer partitions mixes
-        # buckets into every task → tasks×buckets small files). The salt is
-        # therefore adaptive: 1 on small corpora (64 output files), up to 8
-        # at millions of files (fine-grained balance + hub-repo splitting).
-        write_salt = min(8, max(1, n_files_todo // 25_000))
-        aligned = (
-            todo_files
-            .withColumn("_wsalt", F.pmod(F.xxhash64("path"), F.lit(write_salt)))
-            .repartition(n_buckets * write_salt, "bucket", "_wsalt")
-            .drop("_wsalt")
-        )
-        chunks = chunk_repo_files(aligned.drop("bucket"))
-        triples = extract_triples(
-            chunks, error_acc=err_acc, engine=engine
-        ).withColumn("bucket", bucket_col("repo", n_buckets))
-        try:
+        if n_files_todo:
+            # ONE shuffle for the whole extraction path: raw file rows move to
+            # their checkpoint bucket; chunking (intra-row arrays), extraction
+            # (mapInPandas) and the partitioned write all preserve it.
+            # The path-salt keeps a hub repo's bucket from becoming a straggler
+            # task (≤ WRITE_SALT tasks and files per bucket).
+            # Output-file discipline: one file per (bucket, salt) key requires
+            # partitions == keys (hash-partitioning over fewer partitions mixes
+            # buckets into every task → tasks×buckets small files). The salt is
+            # therefore adaptive: 1 on small corpora (64 output files), up to 8
+            # at millions of files (fine-grained balance + hub-repo splitting).
+            write_salt = min(8, max(1, n_files_todo // 25_000))
+            aligned = (
+                todo_files
+                .withColumn("_wsalt", F.pmod(F.xxhash64("path"), F.lit(write_salt)))
+                .repartition(n_buckets * write_salt, "bucket", "_wsalt")
+                .drop("_wsalt")
+            )
+            chunks = chunk_repo_files(aligned.drop("bucket"))
+            triples = extract_triples(
+                chunks, error_acc=err_acc, engine=engine
+            ).withColumn("bucket", bucket_col("repo", n_buckets))
             write_partitioned(
                 triples, os.path.join(out_dir, TRIPLES_DIR), align=False)
-        except BaseException:
-            work_pool.shutdown(wait=True, cancel_futures=True)
-            raise
-        wall = int((time.monotonic() - t0) * 1000)
-        # ledger rows: per-bucket row counts of what we just wrote; the
-        # worklist hashes resolve here — by now the side job long finished
-        # under the main write
-        work = work_fut.result()
-        todo_buckets = sorted(work)
-        written = (
-            spark.read.parquet(os.path.join(out_dir, TRIPLES_DIR))
-            .groupBy("bucket").agg(F.count("*").alias("n"))
-        )
-        counts = {r["bucket"]: r["n"] for r in written.collect()}
-        rows = [(b, work[b][1], counts.get(b, 0), wall) for b in todo_buckets]
-        ledger.commit("triples", rows)
-        metrics.buckets_processed = len(todo_buckets)
-        metrics.extract_errors = err_acc.value
-    work_pool.shutdown(wait=True)
+            wall = int((time.monotonic() - t0) * 1000)
+            # ledger rows: per-bucket row counts of what we just wrote; the
+            # worklist hashes resolve here — by now the side job long finished
+            # under the main write
+            work = work_fut.result()
+            todo_buckets = sorted(work)
+            written = (
+                spark.read.parquet(os.path.join(out_dir, TRIPLES_DIR))
+                .groupBy("bucket").agg(F.count("*").alias("n"))
+            )
+            counts = {r["bucket"]: r["n"] for r in written.collect()}
+            rows = [(b, work[b][1], counts.get(b, 0), wall) for b in todo_buckets]
+            ledger.commit("triples", rows)
+            metrics.buckets_processed = len(todo_buckets)
+            metrics.extract_errors = err_acc.value
     metrics.wall_ms["triples"] = int((time.monotonic() - t0) * 1000)
     return spark.read.parquet(os.path.join(out_dir, TRIPLES_DIR))
 
@@ -285,6 +276,51 @@ def kg_triplets_table(edge_pairs: DataFrame, ctypes: DataFrame,
         )
         .distinct()
     )
+
+
+def derived_table_thunks(
+    submit,
+    edge_agg: DataFrame,
+    canonical_types: DataFrame,
+    nodes,
+    salt: int = 0,
+    community_min_weight: int = 2,
+    community_max_degree: int = 64,
+) -> dict:
+    """``{dir: thunk}`` for the seven DERIVED tables over an edge aggregate
+    and the (canonical_id, type) map — the one implementation behind the
+    full stage, the incremental fold and the cadence rollup. Edge-scale,
+    never corpus-scale: re-deriving the ontology/KgStructure layer from raw
+    triples would rescan the corpus 3×. Submits the communities and
+    ontology builds through ``submit`` (a ``session.concurrent_jobs``
+    submitter) in the ``cc`` and ``ontology`` FAIR pools: the iterative
+    CC's micro-jobs would otherwise queue behind whole write jobs (jobs
+    WITHIN a pool are FIFO; r3 review finding). ``nodes`` is a thunk
+    returning the full nodes table, which kg_nodes projects."""
+    ctypes = canonical_types.withColumnRenamed("canonical_id", "entity_id")
+    edge_pairs = edge_agg.select(
+        F.col("source").alias("subject_id"), F.col("target").alias("object_id"),
+        F.col("description").alias("predicate"),
+    )
+
+    def _ontology():
+        onodes, orels, oconns = build_ontology(edge_pairs, ctypes)
+        return onodes, orels.localCheckpoint(), oconns
+
+    fut_comm = submit(lambda: build_community_tables(
+        edge_agg, min_weight=community_min_weight,
+        max_degree=community_max_degree, salt=salt), pool="cc")
+    fut_onto = submit(_ontology, pool="ontology")
+    return {
+        ONTOLOGY_NODES_DIR: lambda: fut_onto.result()[0],
+        ONTOLOGY_RELATIONS_DIR: lambda: fut_onto.result()[1],
+        ONTOLOGY_CONNECTIONS_DIR: lambda: fut_onto.result()[2],
+        KG_NODES_DIR: lambda: kg_nodes_table(nodes()),
+        KG_TRIPLETS_DIR: lambda: kg_triplets_table(
+            edge_pairs, ctypes, fut_onto.result()[1]),
+        COMMUNITIES_DIR: lambda: fut_comm.result()[0],
+        COMMUNITY_REPORTS_DIR: lambda: fut_comm.result()[1],
+    }
 
 
 def canonical_entity_types(
@@ -381,165 +417,39 @@ def run_graph_stage(
     ).localCheckpoint()  # reused by degree/ontology/kg
     _lap("edge_agg")
 
-    # communities + community reports from the engine's OWN edges (VERDICT
-    # r2 missing #1-2): the reference consumes communities.parquet and
-    # community_reports.parquet produced by GraphRAG's Leiden step
-    # (gen_agent/sampling.py:357,390-393; index/community_report.py:6-153);
-    # here they are derived deterministically — weight/hub-pruned connected
-    # components + the report rollup — so the gen_agent path is
-    # self-contained end-to-end. The stage depends ONLY on the checkpointed
-    # edge_agg, so its iterative CC runs in a side thread OVERLAPPED with
-    # the ontology/nodes builds (job submission is thread-safe; the graph
-    # stage is fixed-latency-bound at this layer, so the overlap absorbs
-    # most of the CC's round latency)
-    def _build_communities():
-        return build_community_tables(
-            edge_agg, min_weight=community_min_weight,
-            max_degree=community_max_degree, salt=salt)
-
-    # daemon thread (an abandoned CC must never block interpreter exit if
-    # a later stage raises) in its own FAIR scheduler pool — pools are
-    # fair-scheduled against each other, while jobs WITHIN a pool are
-    # FIFO, so without the pool split the CC micro-jobs queue behind whole
-    # write jobs (r3 review finding)
-    comm_result: dict = {}
-
-    def _comm_runner():
-        spark.sparkContext.setLocalProperty("spark.scheduler.pool", "cc")
-        try:
-            comm_result["tables"] = _build_communities()
-        except BaseException as exc:  # noqa: BLE001 — re-raised on join
-            comm_result["error"] = exc
-
-    comm_thread = threading.Thread(
-        target=_comm_runner, daemon=True, name="kg-communities")
-    comm_thread.start()
-
-    def _comm_tables():
-        comm_thread.join()
-        if "error" in comm_result:
-            raise comm_result["error"]
-        return comm_result["tables"]
-
+    # The derived tables and the nodes table depend ONLY on the checkpointed
+    # edge_agg/titles/types, so their builds run on side threads, each in
+    # its own FAIR pool, and the write wave starts at once: the independent
+    # writes (mapping, edges) never wait, and each build's jobs ride UNDER
+    # the wave instead of in front of it (r4 scaling: serialized builds were
+    # pure stage latency that does not shrink with cores). Communities come
+    # from the engine's OWN edges (VERDICT r2 missing #1-2; the reference
+    # consumes GraphRAG's Leiden output, gen_agent/sampling.py:357,390-393),
+    # so the gen_agent path is self-contained end-to-end.
     edges = add_combined_degree(edge_agg)
-
-    # The ontology/KgStructure layer is EDGE-scale, never corpus-scale:
-    # classes, relations, connections and instance triplets are all
-    # derivable from the aggregated edge table + the entity-type map —
-    # re-deriving them from raw triples would rescan the corpus 3×.
     canonical_types = canonical_entity_types(spark, mapping, entity_types)
 
-    ctypes = canonical_types.withColumnRenamed("canonical_id", "entity_id")
-    edge_pairs = edge_agg.select(
-        F.col("source").alias("subject_id"), F.col("target").alias("object_id"),
-        F.col("description").alias("predicate"),
-    )
+    def _tables(submit) -> dict:
+        fut_nodes = submit(lambda: build_nodes_from_edges(
+            edge_agg, titles, entity_types=canonical_types).localCheckpoint(),
+            pool="nodes")
+        tables = derived_table_thunks(
+            submit, edge_agg, canonical_types, fut_nodes.result, salt=salt,
+            community_min_weight=community_min_weight,
+            community_max_degree=community_max_degree)
+        # submission only: the builds resolve under the write wave, so
+        # their wall rides in graph.writes
+        _lap("builds")
+        _lap("communities")
+        return {**tables, MAPPING_DIR: lambda: mapping,
+                NODES_DIR: fut_nodes.result, EDGES_DIR: lambda: edges}
 
-    # The ontology and nodes builds both depend only on the checkpointed
-    # edge_agg/titles/ctypes, like the community thread — their eager
-    # checkpoint jobs run CONCURRENTLY in their own FAIR pools instead of
-    # back-to-back on the main thread (r4 scaling: the serialized builds
-    # were pure stage latency that does not shrink with cores, dragging
-    # the full-pipeline N→4N efficiency)
-    def _build_ontology_cp():
-        spark.sparkContext.setLocalProperty("spark.scheduler.pool", "ontology")
-        onodes_, orels_, oconns_ = build_ontology(edge_pairs, ctypes)
-        return onodes_, orels_.localCheckpoint(), oconns_
-
-    def _build_nodes_cp():
-        spark.sparkContext.setLocalProperty("spark.scheduler.pool", "nodes")
-        return build_nodes_from_edges(
-            edge_agg, titles, entity_types=canonical_types).localCheckpoint()
-
-    build_pool = ThreadPoolExecutor(max_workers=2)
-    fut_onto = build_pool.submit(_build_ontology_cp)
-    fut_nodes = build_pool.submit(_build_nodes_cp)
-    # builds are NOT joined here: the write closures below resolve the
-    # futures they need, so the independent writes (mapping, edges,
-    # communities) start immediately and the ontology/nodes checkpoint
-    # jobs ride UNDER the write wave instead of in front of it (r4
-    # scaling: ~6 s of pre-write build latency at the 4N leg was pure
-    # serial fraction). The lap therefore records only submission time.
-    _lap("builds")
-    _lap("communities")
-
-    # kg_nodes is a projection of the nodes table (no corpus rescan)
-    def _kg_nodes() -> DataFrame:
-        return kg_nodes_table(fut_nodes.result())
-
-    def _kg_triplets() -> DataFrame:
-        return kg_triplets_table(edge_pairs, ctypes, fut_onto.result()[1])
-
-    # The 10 output tables are independent given their checkpointed inputs;
-    # submitting the writes CONCURRENTLY overlaps their fixed job-scheduling
-    # latency (the graph stage is ~30 small jobs — serialized, their setup
-    # cost dominated the stage and capped full-pipeline scaling at 0.56;
-    # VERDICT r1 #10). Spark job submission is thread-safe.
-    def _write_plain(name: str, df: DataFrame) -> None:
-        df.write.mode("overwrite").parquet(os.path.join(out_dir, name))
-
-    def _write_vocab(name: str, df: DataFrame) -> None:
-        # ontology classes/relations/connections are VOCABULARY-scale by
-        # construction — writing them through the full shuffle-partition
-        # fan-out costs `spark.sql.shuffle.partitions` near-empty tasks +
-        # files per table, pure commit latency at every scale (r4 scaling)
-        df.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(out_dir, name))
-
-    jobs = [
-        (ONTOLOGY_NODES_DIR,
-         lambda: _write_vocab(ONTOLOGY_NODES_DIR, fut_onto.result()[0])),
-        (ONTOLOGY_RELATIONS_DIR,
-         lambda: _write_vocab(ONTOLOGY_RELATIONS_DIR, fut_onto.result()[1])),
-        (ONTOLOGY_CONNECTIONS_DIR,
-         lambda: _write_vocab(ONTOLOGY_CONNECTIONS_DIR, fut_onto.result()[2])),
-        (KG_NODES_DIR, lambda: _write_plain(KG_NODES_DIR, _kg_nodes())),
-        (KG_TRIPLETS_DIR,
-         lambda: _write_plain(KG_TRIPLETS_DIR, _kg_triplets())),
-        (COMMUNITIES_DIR,
-         lambda: _write_plain(COMMUNITIES_DIR, _comm_tables()[0])),
-        (COMMUNITY_REPORTS_DIR,
-         lambda: _write_plain(COMMUNITY_REPORTS_DIR, _comm_tables()[1])),
-        (MAPPING_DIR, lambda: _write_plain(MAPPING_DIR, mapping)),
-        (NODES_DIR, lambda: write_partitioned(
-            fut_nodes.result().withColumn(
-                "bucket", F.pmod(F.xxhash64("id"), F.lit(N_BUCKETS)).cast("int")),
-            os.path.join(out_dir, NODES_DIR),
-        )),
-        (EDGES_DIR, lambda: write_partitioned(
-            edges.withColumn(
-                "bucket", F.pmod(F.xxhash64("source"), F.lit(N_BUCKETS)).cast("int")),
-            os.path.join(out_dir, EDGES_DIR),
-        )),
-    ]
-
-    def _timed(name: str, thunk) -> None:
-        # per-table wall time INCLUDING the build-future wait — the writes
-        # overlap, so the stage-level lap can't attribute cost; these rows
-        # show which table gates the wave (r5 task: graph.writes latency)
-        w0 = time.monotonic()
-        thunk()
-        metrics.wall_ms[f"graph.write.{name}"] = int(
-            (time.monotonic() - w0) * 1000)
-
-    try:
-        with ThreadPoolExecutor(max_workers=len(jobs)) as pool:
-            for fut in [pool.submit(_timed, n, j) for n, j in jobs]:
-                fut.result()
-    except BaseException:
-        # a failed write must not leave the ontology/nodes build threads
-        # running Spark jobs after this function has raised (ADVICE r4):
-        # cancel anything not started and WAIT for in-flight builds
-        build_pool.shutdown(wait=True, cancel_futures=True)
-        raise
-    else:
-        # success path: the write closures already resolved every build
-        # future, so nothing is in flight — no need to block on shutdown
-        build_pool.shutdown(wait=False)
-    # every table under out_dir was just overwritten: drop memoized byte
-    # estimates so plan-identical re-reads of them re-estimate (r4 #3)
-    from deep_reason_spark.functions.broadcast import bump_estimate_epoch
-    bump_estimate_epoch()
+    # the one staged write path (incremental_kg.write_graph_tables): every
+    # table is staged beside its stored twin and swapped in whole only
+    # after all ten writes succeeded, so a rebuild into an existing out_dir
+    # leaves no stale bucket partition and a failure leaves it untouched
+    from deep_reason_spark.plans.incremental_kg import write_graph_tables
+    write_graph_tables(spark, out_dir, _tables)
     _lap("writes")
     metrics.wall_ms["graph"] = int((time.monotonic() - t0) * 1000)
 

@@ -17,6 +17,9 @@ Design notes (scale-first):
 from __future__ import annotations
 
 import os
+import threading
+from concurrent.futures import Future
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -40,7 +43,7 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # FAIR job scheduling: the graph stage overlaps an iterative CC
         # (many tiny sequential jobs, submitted in its own on-demand
-        # "cc" pool via setLocalProperty) with bulk table writes in the
+        # "cc" pool through concurrent_jobs) with bulk table writes in the
         # default pool; pools are fair-scheduled against each other,
         # while under FIFO (or within one pool) each CC micro-job queues
         # behind whole write jobs and the latency-bound thread stretches
@@ -64,3 +67,44 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+@contextmanager
+def concurrent_jobs(spark: SparkSession):
+    """The one way to run Spark jobs concurrently: yields
+    ``submit(thunk, pool=None) -> Future``.
+
+    Each thunk starts at once on its own thread, with the FAIR scheduler
+    pool ``pool`` set on that thread (none when ``pool`` is None). There is
+    no cap on the thread count: a thunk may block on another thunk's
+    future. Leaving the block joins every thunk, whether or not anyone read
+    its future, and then re-raises the first failure (an exception raised
+    by the block itself takes precedence). So no job submitted here
+    outlives the block, and no side-job failure is dropped."""
+    sc = spark.sparkContext
+    threads: list[threading.Thread] = []
+    failures: list[BaseException] = []
+
+    def submit(thunk, pool: str | None = None) -> Future:
+        fut: Future = Future()
+
+        def run() -> None:
+            sc.setLocalProperty("spark.scheduler.pool", pool)
+            try:
+                fut.set_result(thunk())
+            except BaseException as exc:  # noqa: BLE001 — re-raised on exit
+                failures.append(exc)
+                fut.set_exception(exc)
+
+        t = threading.Thread(target=run, name=f"concurrent_jobs-{pool}")
+        t.start()
+        threads.append(t)
+        return fut
+
+    try:
+        yield submit
+    finally:
+        for t in threads:
+            t.join()
+    if failures:
+        raise failures[0]

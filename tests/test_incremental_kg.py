@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from deep_reason_spark.datagen import alias_dict_df, generate_repo_files
@@ -84,11 +85,16 @@ def test_incremental_update_equals_full_rebuild(spark, tmp_path):
     _assert_all_tables_equal(spark, inc_dir, full_dir)
 
 
+@pytest.mark.parametrize("entry", ["fold", "rebuild", "rollup"])
 def test_failed_staging_write_leaves_stored_graph_untouched(
-        spark, tmp_path, monkeypatch):
-    """The update stages every table then swaps all in: a write failure
-    mid-wave must leave the stored graph at the PRE-update state (no
-    partial swap) and raise the original error."""
+        spark, tmp_path, monkeypatch, entry):
+    """Every entry point stages every table then swaps all in: a write
+    failure mid-wave must leave the stored graph at the PRE-call state (no
+    partial swap), raise the original error, and leave no helper thread or
+    Spark job running. Entry points: the fold, ``run_graph_stage`` over an
+    already-built graph, and the cadence rollup."""
+    import threading
+
     import deep_reason_spark.plans.incremental_kg as inc
 
     alias_dict = alias_dict_df(spark)
@@ -102,6 +108,15 @@ def test_failed_staging_write_leaves_stored_graph_untouched(
     out = str(tmp_path / "g")
     run_graph_stage(spark, part_a, alias_dict, out)
     init_incremental_state(spark, part_a, alias_dict, out)
+    if entry == "rollup":
+        run_incremental_kg_update(spark, part_b, alias_dict, out,
+                                  refresh_derived=False)
+    run = {
+        "fold": lambda: run_incremental_kg_update(
+            spark, part_b, alias_dict, out),
+        "rebuild": lambda: run_graph_stage(spark, triples, alias_dict, out),
+        "rollup": lambda: inc.refresh_derived_tables(spark, out),
+    }[entry]
     before = {n: _table_rows(spark, out, n) for n in GRAPH_TABLE_DIRS}
 
     real_stage = inc._stage
@@ -114,21 +129,48 @@ def test_failed_staging_write_leaves_stored_graph_untouched(
         return real_stage(df, path, writer)
 
     monkeypatch.setattr(inc, "_stage", failing_stage)
+    threads_before = set(threading.enumerate())
     try:
-        run_incremental_kg_update(spark, part_b, alias_dict, out)
+        run()
         raise AssertionError("expected the injected write failure to raise")
     except RuntimeError as exc:
         assert "injected" in str(exc)
+    assert [t for t in threading.enumerate()
+            if t not in threads_before and t.is_alive()] == []
+    assert list(spark.sparkContext.statusTracker().getActiveJobsIds()) == []
     monkeypatch.setattr(inc, "_stage", real_stage)
 
     assert calls["n"] > 1  # the wave genuinely ran past the failing table
     after = {n: _table_rows(spark, out, n) for n in GRAPH_TABLE_DIRS}
     assert after == before
-    # and the update is still appliable afterwards (state not corrupted)
-    run_incremental_kg_update(spark, part_b, alias_dict, out)
+    # and the call is still appliable afterwards (state not corrupted)
+    run()
     full_dir = str(tmp_path / "full")
     run_graph_stage(spark, triples, alias_dict, full_dir)
     _assert_all_tables_equal(spark, out, full_dir)
+
+
+def test_rebuild_into_existing_dir_equals_fresh_build(spark, tmp_path):
+    """A full build over a SMALLER corpus into a directory that already
+    holds a graph must replace all ten tables whole: no stale ``bucket=``
+    partition of the earlier, larger graph may survive."""
+    from deep_reason_spark.datagen import REPO_FILES_SCHEMA
+
+    alias_dict = alias_dict_df(spark)
+    big = extract_triples(
+        chunk_repo_files(generate_repo_files(spark, 60))).localCheckpoint()
+    one_file = spark.createDataFrame(
+        [("org0/proj0", "src/one/file_z.md", "e" * 40, "md",
+          "Zorwex Quofen maintains Mulbal Tarpim.")], REPO_FILES_SCHEMA)
+    small = extract_triples(chunk_repo_files(one_file)).localCheckpoint()
+    assert small.count() == 1
+
+    out = str(tmp_path / "g")
+    run_graph_stage(spark, big, alias_dict, out)
+    run_graph_stage(spark, small, alias_dict, out)
+    fresh = str(tmp_path / "fresh")
+    run_graph_stage(spark, small, alias_dict, fresh)
+    _assert_all_tables_equal(spark, out, fresh)
 
 
 def _snap_buckets(out_dir, table):

@@ -134,6 +134,30 @@ def test_second_run_is_noop(spark, out_dir):
     assert m.buckets_processed == 0
 
 
+def test_worklist_side_job_failure_surfaces_on_empty_worklist(
+        spark, out_dir, monkeypatch):
+    """A resume run with every bucket already committed never reads the
+    worklist side job's result; its failure must still raise, not be
+    dropped when the side thread is joined."""
+    import types
+
+    from deep_reason_spark.plans import kg_pipeline
+
+    rf = generate_repo_files(spark, 20).cache()
+    run_triples_stage(spark, rf, out_dir, n_buckets=4)
+
+    def failing_xxhash64(*cols):
+        raise RuntimeError("worklist collect failed (injected)")
+
+    # on an empty worklist only the side job calls kg_pipeline.F.xxhash64
+    # (bucket_col uses checkpoint.py's own import)
+    proxy = types.SimpleNamespace(**vars(F))
+    proxy.xxhash64 = failing_xxhash64
+    monkeypatch.setattr(kg_pipeline, "F", proxy)
+    with pytest.raises(RuntimeError, match="injected"):
+        run_triples_stage(spark, rf, out_dir, n_buckets=4)
+
+
 def test_broadcast_guard_is_byte_aware(spark):
     from deep_reason_spark.plans.kg_pipeline import (
         broadcast_if_small,
