@@ -2,7 +2,7 @@
 
 ``longest_name`` is THE tie-break rule for every "canonical display name =
 longest surface form" reduction in the engine (full graph stage, ontology,
-edge naming, incremental title state). A bare
+edge naming, incremental title merge). A bare
 ``max_by(name, length(name))`` is nondeterministic on equal-length ties,
 which breaks two contracts at once: the incremental-maintenance exactness
 guarantee (the reduction must be associative — a two-level merge must pick

@@ -25,20 +25,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from deep_reason_spark.functions.names import longest_name
 
-from deep_reason_spark.functions import broadcast as _bc
+from deep_reason_spark.functions.broadcast import broadcast_hint
 
 MAX_TEXT_UNITS = 100  # provenance sample cap per edge
-
-
-def _gate(df: DataFrame):
-    """One byte estimate → a join hint reusable across several joins of the
-    same map. Entity-scale lookup maps (names, titles, types) grow with the
-    corpus: forcing F.broadcast on them is the 100×-scale bug class
-    (VERDICT r2 #2); beyond the gate they shuffle and AQE owns skew.
-    The threshold reads the module global at CALL time (one tunable knob,
-    same contract as broadcast_if_small). Thin alias of the shared
-    ``broadcast_hint`` kept for this module's call sites."""
-    return _bc.broadcast_hint(df)
 
 
 def build_edges(canonical_triples: DataFrame,
@@ -101,7 +90,7 @@ def _finish_edges(agg: DataFrame, names: DataFrame | None) -> DataFrame:
     display strings from the canonical ids themselves (the coalesce
     fallback build_edges already had for unmapped ids)."""
     if names is not None:
-        hint = _gate(names)
+        hint = broadcast_hint(names)
         named = (
             agg.join(hint(names.select(F.col("canonical_id").alias("src"),
                                        F.col("name").alias("_sname"))),
@@ -425,7 +414,7 @@ def build_nodes(canonical_triples: DataFrame, entity_types: DataFrame | None = N
     )
     if entity_types is not None:
         nodes = nodes.join(
-            _gate(entity_types)(
+            broadcast_hint(entity_types)(
                 entity_types.select(F.col("canonical_id").alias("id"), "type")),
             "id", "left",
         ).withColumn("type", F.coalesce("type", F.lit("entity")))
@@ -458,31 +447,16 @@ def build_nodes_from_edges(
         .alias("description"),
     )
     nodes = per_node.join(
-        _gate(titles)(titles.select(F.col("canonical_id").alias("id"), "title")),
+        broadcast_hint(titles)(
+            titles.select(F.col("canonical_id").alias("id"), "title")),
         "id", "left")
     nodes = nodes.withColumn("title", F.coalesce("title", F.col("id")))
     if entity_types is not None:
         nodes = nodes.join(
-            _gate(entity_types)(
+            broadcast_hint(entity_types)(
                 entity_types.select(F.col("canonical_id").alias("id"), "type")),
             "id", "left",
         ).withColumn("type", F.coalesce("type", F.lit("entity")))
     else:
         nodes = nodes.withColumn("type", F.lit("entity"))
     return nodes.select("id", "title", "type", "description", "frequency", "degree")
-
-
-def induced_subgraph(edges: DataFrame, members: DataFrame) -> DataFrame:
-    """Community subgraph induction (G4, gen_agent/sampling.py:397-407):
-    keep edges whose BOTH endpoints are members — two semi-joins, broadcast
-    while the member set passes the byte gate (a community is usually
-    degree-pruned small, but member sets are entity-derived, so a hub
-    community must not OOM executors — gate hygiene, VERDICT r4 task 3)."""
-    from deep_reason_spark.functions.broadcast import broadcast_if_small
-    m = members.select(
-        F.col(members.columns[0]).alias("node")).distinct().localCheckpoint()
-    gated = broadcast_if_small(m)
-    return (
-        edges.join(gated.withColumnRenamed("node", "source"), "source", "semi")
-        .join(gated.withColumnRenamed("node", "target"), "target", "semi")
-    )

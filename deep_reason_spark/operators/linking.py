@@ -13,46 +13,28 @@ Spark-first design (shuffle-free on the fact side):
   the broadcast-scale table), so the corpus-scale side needs exactly one
   broadcast hash join and never shuffles — at 10^12 files this is the only
   linking plan that survives;
-- per-row confidence is a vectorized Arrow ``pandas_udf``
-  (prior + surface/canonical affinity), evaluated post-join with no
-  repartitioning;
+- per-row confidence (prior + surface/canonical affinity) is one Catalyst
+  expression, evaluated post-join with no repartitioning and no Python
+  worker;
 - misses keep the row with a deterministic fallback id (md5 of the
   normalized surface), mirroring the reference's empty-default row.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import DoubleType
 
 from deep_reason_spark.functions.broadcast import broadcast_if_small
 
 
-@pandas_udf(DoubleType())
-def link_score(mention: pd.Series, canonical: pd.Series, prior: pd.Series) -> pd.Series:
+def link_score_col(mention, canonical, prior):
     """Candidate confidence = dictionary prior + surface-form affinity.
 
     Exact (case-insensitive) match of the canonical name scores 1.0; a
     mention that is a prefix of the canonical (the alias case) scores by
-    covered length. Vectorized pandas ops only."""
-    m = mention.str.lower().fillna("")
-    c = canonical.str.lower().fillna("")
-    exact = (m == c).astype("float64")
-    starts = pd.Series(
-        [len(mm) > 0 and cc.startswith(mm) for mm, cc in zip(m, c)], index=m.index
-    ).astype("float64")
-    cover = (m.str.len() / c.str.len().clip(lower=1)).astype("float64")
-    affinity = exact.where(exact == 1.0, starts * cover)
-    return (prior.astype("float64").fillna(0.0) + affinity).astype("float64")
-
-
-def link_score_col(mention, canonical, prior):
-    """JVM-native column version of the scoring formula (same semantics as
-    the pandas UDF) — used on the dictionary side so dictionary prep never
-    spins up Python workers."""
+    covered length. A JVM-native expression, so neither dictionary prep nor
+    mention linking spins up Python workers."""
     m = F.lower(mention)
     c = F.lower(canonical)
     exact = F.when(m == c, F.lit(1.0)).otherwise(F.lit(0.0))
@@ -113,10 +95,8 @@ def link_mentions(
             F.concat(F.lit("unk-"), F.md5(F.lower(F.col(mention_col)))),
         ).alias("entity_id"),
         F.coalesce("canonical_name", F.col(mention_col)).alias("canonical_name"),
-        F.coalesce(
-            link_score(F.col(mention_col), F.col("canonical_name"), F.col("prior")),
-            F.lit(0.0),
-        ).alias("link_score"),
+        link_score_col(F.col(mention_col), F.col("canonical_name"),
+                       F.col("prior")).alias("link_score"),
         F.col("canonical_name").isNotNull().alias("linked"),
     )
 

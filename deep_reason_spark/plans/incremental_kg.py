@@ -21,14 +21,14 @@ operators shipped in r5:
    (``widen_degree_affected``: a merge changes the distinct-neighbor
    count of the rep's neighbors too), so passthrough rows keep their
    stored ``combined_degree`` verbatim while touched rows re-decorate
-   from an incrementally-folded (node, deg) state table — no
+   from the stored nodes' ``degree`` column, re-derived for D only — no
    full-edge-table degree shuffle per batch;
 4. node rows can change only for ids in D, so the nodes build runs over
    the batch-scale touched edges and keeps the D rows
    (``build_nodes_from_edges`` — proven row-equivalent to the
    corpus-scale build in ``test_graph_nodes.py``); canonical display
-   titles are maintained as entity-scale state (relabel + longest-name
-   merge, the same reduction the full build applies);
+   titles start from the stored nodes' ``title`` column (relabel +
+   longest-name merge, the same reduction the full build applies);
 5. the two bucket-partitioned corpus-scale tables (edges, nodes) stage
    and swap ONLY the affected ``bucket=`` partitions — buckets(D) plus
    the stored buckets holding a row whose target is in D, discovered by
@@ -69,10 +69,10 @@ atomic directory rename — whole, or, for the fold's sparse regime, only its
 affected ``bucket=`` partitions. The lazily-read old table must never be
 overwritten mid-read, and a failure anywhere leaves every stored table at
 its previous state with no job still running (a cluster deployment uses a
-transactional table format or the HDFS rename for the same reason). State
-lives under ``out_dir`` next to the stage tables: ``entity_blocks``
-(vocabulary-scale) ``entity_titles`` and ``entity_degrees``
-(entity-scale)."""
+transactional table format or the HDFS rename for the same reason). The
+only state beyond the graph tables is ``entity_blocks`` (vocabulary-scale)
+and the ``_state_manifest.json`` layout stamp, both under ``out_dir``; each
+entity's title and degree are read back from the stored nodes table."""
 
 from __future__ import annotations
 
@@ -120,8 +120,6 @@ from deep_reason_spark.session import concurrent_jobs
 from deep_reason_spark.sources.checkpoint import write_partitioned
 
 BLOCKS_DIR = "entity_blocks"
-TITLES_DIR = "entity_titles"
-DEGREES_DIR = "entity_degrees"
 
 
 def _plain(df: DataFrame, path: str) -> None:
@@ -159,8 +157,6 @@ TABLE_WRITERS = {
     COMMUNITIES_DIR: _plain,
     COMMUNITY_REPORTS_DIR: _plain,
     BLOCKS_DIR: _vocab,
-    TITLES_DIR: _plain,
-    DEGREES_DIR: _plain,
 }
 
 # Incremental-state manifest (VERDICT r5 "What's wrong" #1): the stored
@@ -236,25 +232,13 @@ def init_incremental_state(
 ) -> None:
     """Make an existing ``run_graph_stage`` output incrementally updatable:
     one narrow corpus pass (the same distinct-surface scan the stage
-    itself runs) derives the block-representative and canonical-title
-    state tables. Call once after the initial full build."""
-    sm = build_surface_map(triples, alias_dict).localCheckpoint()
-    ids, _, blocks = _ids_blocks_titles(sm)
-    mapping = spark.read.parquet(os.path.join(out_dir, MAPPING_DIR))
-    titles = (
-        ids.join(broadcast_if_small(mapping), "entity_id")
-        .groupBy("canonical_id")
-        .agg(longest_name("canonical_name")
-             .alias("title"))
-    )
-    # degree state (node → distinct undirected neighbors): lets updates
-    # maintain combined_degree for O(degree-affected) rows instead of the
-    # two full-edge-table shuffle joins add_combined_degree costs
-    degrees = degrees_from_edges(
-        spark.read.parquet(os.path.join(out_dir, EDGES_DIR)))
-    write_graph_tables(spark, out_dir, lambda submit: {
-        BLOCKS_DIR: lambda: blocks, TITLES_DIR: lambda: titles,
-        DEGREES_DIR: lambda: degrees})
+    itself runs) derives the block-representative state table, and the
+    manifest pins the bucket layout. Titles and degrees need no state of
+    their own: the fold reads them from the stored nodes table. Call once
+    after the initial full build."""
+    _, _, blocks = _ids_blocks_titles(build_surface_map(triples, alias_dict))
+    write_graph_tables(spark, out_dir,
+                       lambda submit: {BLOCKS_DIR: lambda: blocks})
     _write_state_manifest(out_dir)
 
 
@@ -340,19 +324,20 @@ def run_incremental_kg_update(
     out_dir: str,
     salt: int = 0,
     entity_types: DataFrame | None = None,
-    community_min_weight: int = 2,
-    community_max_degree: int = 64,
     wall_ms: dict | None = None,
     refresh_derived: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Fold ``new_triples`` into the graph-stage tables at ``out_dir``
     (requires ``init_incremental_state`` once beforehand). Refreshes ALL
-    ten ``run_graph_stage`` tables plus the three state tables; returns the
-    refreshed (nodes, edges) readers, matching ``run_graph_stage``.
+    ten ``run_graph_stage`` tables plus the ``entity_blocks`` state; returns
+    the refreshed (nodes, edges) readers, matching ``run_graph_stage``.
+    Each entity's stored title and degree come from ONE column-pruned,
+    pinned read of the nodes table, which the fold rewrites for every id
+    whose title or degree can change.
 
     ``refresh_derived=False`` maintains only the CORE tables + state
-    (mapping, edges, nodes, blocks, titles, degrees — every one of them
-    O(batch + affected) in the sparse regime) and leaves the DERIVED
+    (mapping, edges, nodes, blocks — every one of them O(batch +
+    affected) in the sparse regime) and leaves the DERIVED
     tables (communities, ontology_*, kg_*) at their previous state: those
     are inherently edge-scale GLOBAL recomputes (community detection, the
     densely-numbered relation registry), so at corpus scale they dominate
@@ -361,9 +346,9 @@ def run_incremental_kg_update(
     and calls :func:`refresh_derived_tables` on a cadence — the
     transactional-core / periodic-rollup split; at any refresh point the
     derived tables equal the full rebuild exactly.
-    ``entity_types`` / ``community_*`` mirror the full stage's knobs and
-    must be passed the same values the initial build used, or the derived
-    tables diverge from a full rebuild by design. ``wall_ms`` (optional
+    ``entity_types`` mirrors the full stage's knob and must be passed the
+    same value the initial build used, or the derived tables diverge from
+    a full rebuild by design. ``wall_ms`` (optional
     dict) receives per-phase laps keyed ``inc.<phase>``."""
     import time
 
@@ -378,19 +363,19 @@ def run_incremental_kg_update(
 
     mapping = spark.read.parquet(os.path.join(out_dir, MAPPING_DIR))
     old_blocks = spark.read.parquet(os.path.join(out_dir, BLOCKS_DIR))
-    old_titles = spark.read.parquet(os.path.join(out_dir, TITLES_DIR))
     # keep the storage partition column AND the stored combined_degree:
     # both are reused verbatim on passthrough rows (partition pruning +
     # degree passthrough — see the routed split below)
     old_edges = spark.read.parquet(os.path.join(out_dir, EDGES_DIR))
     old_nodes = spark.read.parquet(os.path.join(out_dir, NODES_DIR))
-    degrees_path = os.path.join(out_dir, DEGREES_DIR)
-    if os.path.exists(degrees_path):
-        old_degrees = spark.read.parquet(degrees_path)
-    else:
-        # state written by a pre-degree init: one-time full derivation
-        # (every later batch folds incrementally)
-        old_degrees = degrees_from_edges(old_edges)
+    # the stored nodes carry each entity's title (longest canonical name)
+    # and degree (distinct neighbours): ONE column-pruned read, pinned
+    # (entity-scale) — it feeds the title merge, the entity count and the
+    # degree fold, and must not be re-read after the swap
+    node_state = old_nodes.select("id", "title", "degree").localCheckpoint()
+    old_titles = node_state.select(F.col("id").alias("canonical_id"), "title")
+    old_degrees = node_state.select(F.col("id").alias("node"),
+                                    F.col("degree").alias("deg"))
 
     # ---- batch-scale entity work ------------------------------------------
     sm = build_surface_map(new_triples, alias_dict).localCheckpoint()
@@ -464,7 +449,7 @@ def run_incremental_kg_update(
         .join(hint(side("object", "dst")), "object")
     )
 
-    # ---- titles: relabel stored state, fold in the batch (max-by-length) --
+    # ---- titles: relabel the stored nodes' titles, fold in the batch -----
     batch_titles = (
         ids.join(broadcast_if_small(batch_canon), "entity_id")
         .groupBy("canonical_id")
@@ -511,7 +496,7 @@ def run_incremental_kg_update(
     # (entities grow with the corpus; a batch touches a small fraction)
     # take the O(affected) path below.
     n_affected = affected.count()
-    n_entities = old_degrees.count()
+    n_entities = node_state.count()
     dense = n_affected >= DENSE_AFFECTED_FRACTION * max(n_entities, 1)
     if not dense and delta.limit(1).count() > 0:
         # the widening scan only pays off when a relabel happened
@@ -545,9 +530,8 @@ def run_incremental_kg_update(
         edge_agg = pass_rows.select(*touched.columns).unionByName(touched)
         _lap("edge_agg")
 
-        # ---- degrees: state fold + decoration (O(D), no full shuffles) ----
-        new_degrees = incremental_degrees(
-            old_degrees, touched, affected).localCheckpoint()
+        # ---- degrees: fold the stored nodes' degrees + decorate (O(D)) ----
+        new_degrees = incremental_degrees(old_degrees, touched, affected)
         touched_out = combined_degree_from_state(touched, new_degrees)
         _lap("degrees")
 
@@ -627,17 +611,13 @@ def run_incremental_kg_update(
         tables = {
             MAPPING_DIR: lambda: new_mapping,
             BLOCKS_DIR: lambda: merged_blocks,
-            TITLES_DIR: lambda: new_titles,
-            DEGREES_DIR: lambda: new_degrees,
             EDGES_DIR: lambda: edges_staged,
             NODES_DIR: lambda: _nodes(fut_nodes, bucket_pruned=True),
         }
         if refresh_derived:
             tables.update(derived_table_thunks(
                 submit, edge_agg, canonical_types,
-                lambda: _nodes(fut_nodes, bucket_pruned=False), salt=salt,
-                community_min_weight=community_min_weight,
-                community_max_degree=community_max_degree))
+                lambda: _nodes(fut_nodes, bucket_pruned=False), salt=salt))
         # submission only: the builds resolve under the write wave, so
         # their wall rides in inc.writes (BASELINE.md "builds (submission)")
         _lap("builds")
@@ -660,8 +640,6 @@ def refresh_derived_tables(
     out_dir: str,
     salt: int = 0,
     entity_types: DataFrame | None = None,
-    community_min_weight: int = 2,
-    community_max_degree: int = 64,
 ) -> None:
     """Re-derive the seven DERIVED tables (communities, community_reports,
     ontology_*, kg_nodes, kg_triplets) from the CURRENT stored core tables
@@ -671,8 +649,8 @@ def refresh_derived_tables(
     equals a full rebuild over all triples folded so far. Edge-scale by
     nature (community detection and the densely-numbered relation registry
     are global); per-batch maintenance of these is the cost this function
-    moves OFF the fold path. ``salt``/``entity_types``/``community_*``
-    must match the values the graph was built with."""
+    moves OFF the fold path. ``salt``/``entity_types`` must match the
+    values the graph was built with."""
     edge_agg = spark.read.parquet(os.path.join(out_dir, EDGES_DIR)).select(
         "id", "human_readable_id", "source", "target", "description",
         "weight", "text_unit_ids")
@@ -680,6 +658,4 @@ def refresh_derived_tables(
     mapping = spark.read.parquet(os.path.join(out_dir, MAPPING_DIR))
     canonical_types = canonical_entity_types(spark, mapping, entity_types)
     write_graph_tables(spark, out_dir, lambda submit: derived_table_thunks(
-        submit, edge_agg, canonical_types, lambda: nodes, salt=salt,
-        community_min_weight=community_min_weight,
-        community_max_degree=community_max_degree))
+        submit, edge_agg, canonical_types, lambda: nodes, salt=salt))

@@ -86,15 +86,21 @@ DERIVED_TABLE_DIRS = (
 )
 GRAPH_TABLE_DIRS = CORE_TABLE_DIRS + DERIVED_TABLE_DIRS
 
+# community pruning before detection (``build_community_tables``): a pair
+# is kept when its aggregate weight reaches the minimum and neither end
+# has more kept neighbours than the maximum. Fixed engine-wide, so a fold
+# or rollup always prunes exactly as the build did.
+COMMUNITY_MIN_WEIGHT = 2
+COMMUNITY_MAX_DEGREE = 64
+
 # byte-gated broadcast guard — shared engine-wide (functions/broadcast.py);
-# the function names are re-exported for existing call sites and tests, but
 # the tuning knob lives ONLY at functions.broadcast.BROADCAST_MAX_BYTES
 # (gates read the module global at call time — re-exporting the constant
 # here made setting kg_pipeline.BROADCAST_MAX_BYTES a silent no-op,
 # ADVICE r3)
-from deep_reason_spark.functions.broadcast import (  # noqa: E402,F401
+from deep_reason_spark.functions.broadcast import (  # noqa: E402
+    broadcast_hint,
     broadcast_if_small,
-    estimate_bytes,
 )
 
 
@@ -208,15 +214,13 @@ def run_triples_stage(
 
 def build_community_tables(
     edge_agg: DataFrame,
-    min_weight: int = 2,
-    max_degree: int = 64,
     salt: int = 0,
 ) -> tuple[DataFrame, DataFrame]:
     """(communities, community_reports) from a pinned edge aggregate — the
     single implementation behind the full graph stage AND the incremental
     refresh. One undirected pair per entity pair: edge_agg is keyed per
     PREDICATE and per DIRECTION, and pruning per slice would split a pair
-    whose aggregate weight clears min_weight (r3 review finding for
+    whose aggregate weight clears the minimum (r3 review finding for
     predicates; ADVICE r3 for reciprocal a→b / b→a edges, which also
     double-counted in community_reports' internal-degree rollup). The pair
     aggregation is pinned: consumed by the prune subplan AND the all-nodes
@@ -236,7 +240,7 @@ def build_community_tables(
     ).agg(F.sum("weight").cast("bigint").alias("weight")).localCheckpoint()
     kept_edges = prune_edges(
         comm_edges, weight_col="weight",
-        min_weight=min_weight, max_degree=max_degree,
+        min_weight=COMMUNITY_MIN_WEIGHT, max_degree=COMMUNITY_MAX_DEGREE,
     ).localCheckpoint()
     all_ents = (comm_edges.select(F.col("src").alias("node"))
                 .union(comm_edges.select(F.col("dst").alias("node")))
@@ -284,8 +288,6 @@ def derived_table_thunks(
     canonical_types: DataFrame,
     nodes,
     salt: int = 0,
-    community_min_weight: int = 2,
-    community_max_degree: int = 64,
 ) -> dict:
     """``{dir: thunk}`` for the seven DERIVED tables over an edge aggregate
     and the (canonical_id, type) map — the one implementation behind the
@@ -307,9 +309,8 @@ def derived_table_thunks(
         onodes, orels, oconns = build_ontology(edge_pairs, ctypes)
         return onodes, orels.localCheckpoint(), oconns
 
-    fut_comm = submit(lambda: build_community_tables(
-        edge_agg, min_weight=community_min_weight,
-        max_degree=community_max_degree, salt=salt), pool="cc")
+    fut_comm = submit(lambda: build_community_tables(edge_agg, salt=salt),
+                      pool="cc")
     fut_onto = submit(_ontology, pool="ontology")
     return {
         ONTOLOGY_NODES_DIR: lambda: fut_onto.result()[0],
@@ -348,8 +349,6 @@ def run_graph_stage(
     salt: int = 0,
     metrics: PipelineMetrics | None = None,
     entity_types: DataFrame | None = None,
-    community_min_weight: int = 2,
-    community_max_degree: int = 64,
 ) -> tuple[DataFrame, DataFrame]:
     """Stage 2: link → canonicalize → ontology → materialize graph tables.
 
@@ -382,10 +381,7 @@ def run_graph_stage(
         .select("surface", "entity_id", "canonical_id", "canonical_name", "linked")
         .localCheckpoint()
     )
-    from deep_reason_spark.functions import broadcast as _bc
-    hint = (F.broadcast
-            if estimate_bytes(full_map) <= _bc.BROADCAST_MAX_BYTES
-            else (lambda df: df))
+    hint = broadcast_hint(full_map)
     _lap("full_map")
 
     # ONLY canonical ids ride the corpus-scale join (names/entity ids are
@@ -434,9 +430,7 @@ def run_graph_stage(
             edge_agg, titles, entity_types=canonical_types).localCheckpoint(),
             pool="nodes")
         tables = derived_table_thunks(
-            submit, edge_agg, canonical_types, fut_nodes.result, salt=salt,
-            community_min_weight=community_min_weight,
-            community_max_degree=community_max_degree)
+            submit, edge_agg, canonical_types, fut_nodes.result, salt=salt)
         # submission only: the builds resolve under the write wave, so
         # their wall rides in graph.writes
         _lap("builds")

@@ -71,7 +71,11 @@ def q_a7_pricing_summary(spark, sf_dir):
                 (_dec("l_extendedprice") * (F.lit(1).cast("decimal(18,4)") - _dec("l_discount")))
                 .cast("decimal(28,8)")
             ).cast("double").alias("sum_disc_price"),
-            F.round(F.avg(_dec("l_quantity")), 6).cast("double").alias("avg_qty"),
+            # sum / count, not avg: avg(decimal) already rounds HALF_UP to
+            # 8 places, so rounding again to 6 can carry (25.695851495566 →
+            # 25.69585150 → 25.695852; the exact quotient gives 25.695851)
+            F.round(F.sum(_dec("l_quantity")) / F.count("*"), 6)
+            .cast("double").alias("avg_qty"),
             F.count("*").alias("count_order"),
         )
     )

@@ -26,7 +26,6 @@ read-modify-write races).
 from __future__ import annotations
 
 import os
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -93,19 +92,3 @@ def write_partitioned(
     # plan-identical scan of it are now stale (VERDICT r4 #3)
     from deep_reason_spark.functions.broadcast import bump_estimate_epoch
     bump_estimate_epoch()
-
-
-def stage_input_hash(df: DataFrame, cols: list[str]) -> str:
-    """Content hash of a stage input (the reference's md5-of-input cache key,
-    kg_agent/utils.py:114) — order-insensitive xor-style aggregate of row
-    hashes, computed distributed."""
-    row = df.select(
-        # decimal sum: overflow-proof under ANSI mode (Spark 4 default)
-        F.sum(F.xxhash64(*cols).cast("decimal(38,0)")).alias("s"),
-        F.count("*").alias("n"),
-    ).collect()[0]
-    return f"{row['s']}:{row['n']}"
-
-
-def now_ms() -> int:
-    return int(time.monotonic() * 1000)

@@ -153,8 +153,6 @@ def stream_maintain_kg(
     checkpoint_dir: str | None = None,
     salt: int = 0,
     entity_types: DataFrame | None = None,
-    community_min_weight: int = 2,
-    community_max_degree: int = 64,
     derived_every: int = 1,
 ):
     """Continuously-maintained knowledge graph over a DOCUMENT stream — the
@@ -209,9 +207,8 @@ def stream_maintain_kg(
     the lineage mismatch raises, with the remediation being either
     restoring the checkpoint or rebuilding into a fresh ``out_dir``.
 
-    ``salt`` / ``entity_types`` / ``community_*`` must be held constant
-    across the stream's lifetime (same contract as
-    ``run_incremental_kg_update``)."""
+    ``salt`` / ``entity_types`` must be held constant across the stream's
+    lifetime (same contract as ``run_incremental_kg_update``)."""
     checkpoint_dir = checkpoint_dir or os.path.join(out_dir, "_kg_checkpoint")
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
@@ -219,8 +216,6 @@ def stream_maintain_kg(
             spark, batch_df, batch_id, out_dir=out_dir,
             checkpoint_dir=checkpoint_dir, alias_dict=alias_dict, salt=salt,
             entity_types=entity_types,
-            community_min_weight=community_min_weight,
-            community_max_degree=community_max_degree,
             # derived-rollup cadence: batch ids are monotonic within one
             # checkpoint lineage, so every Nth batch refreshes the global
             # derived tables and the rest fold core-only (O(affected))
@@ -251,8 +246,6 @@ def _maintain_kg_batch(
     alias_dict: DataFrame,
     salt: int = 0,
     entity_types: DataFrame | None = None,
-    community_min_weight: int = 2,
-    community_max_degree: int = 64,
     refresh_derived: bool = True,
 ) -> None:
     """One ``stream_maintain_kg`` micro-batch — module-level so the crash
@@ -330,8 +323,6 @@ def _maintain_kg_batch(
         run_graph_stage(
             spark, triples, alias_dict, stage_dir, salt=salt,
             entity_types=entity_types,
-            community_min_weight=community_min_weight,
-            community_max_degree=community_max_degree,
         )
         init_incremental_state(spark, triples, alias_dict, stage_dir)
         for name in os.listdir(stage_dir):
@@ -348,8 +339,6 @@ def _maintain_kg_batch(
         run_incremental_kg_update(
             spark, triples, alias_dict, out_dir, salt=salt,
             entity_types=entity_types,
-            community_min_weight=community_min_weight,
-            community_max_degree=community_max_degree,
             refresh_derived=refresh_derived,
         )
         _record(batch_id)

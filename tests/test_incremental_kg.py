@@ -196,7 +196,6 @@ def test_untouched_bucket_partitions_are_not_rewritten(spark, tmp_path):
     O(graph)."""
     from deep_reason_spark.datagen import REPO_FILES_SCHEMA
     from deep_reason_spark.operators.graph import degrees_from_edges
-    from deep_reason_spark.plans.incremental_kg import DEGREES_DIR
 
     alias_dict = alias_dict_df(spark)
     base_files = generate_repo_files(spark, 60).localCheckpoint()
@@ -227,12 +226,38 @@ def test_untouched_bucket_partitions_are_not_rewritten(spark, tmp_path):
     full_dir = str(tmp_path / "full")
     run_graph_stage(spark, base.unionByName(batch), alias_dict, full_dir)
     _assert_all_tables_equal(spark, out, full_dir)
-    # and the degree state equals a from-scratch derivation
+    # and the stored node degrees equal a from-scratch derivation
     stored_degs = sorted(map(tuple, spark.read.parquet(
-        os.path.join(out, DEGREES_DIR)).collect()))
+        os.path.join(out, "nodes")).select("id", "degree").collect()))
     fresh_degs = sorted(map(tuple, degrees_from_edges(
         spark.read.parquet(os.path.join(out, "edges"))).collect()))
     assert stored_degs == fresh_degs
+
+
+def test_stored_state_is_graph_tables_blocks_and_manifest(spark, tmp_path):
+    """The stored format: after a build, a state init and one fold,
+    ``out_dir`` holds the ten graph tables, the ``entity_blocks`` state and
+    the manifest, nothing else — each entity's title and degree live only
+    in the nodes table — and no ``__staging``/``__old`` leftover of the
+    staged writes."""
+    from deep_reason_spark.plans.incremental_kg import (
+        BLOCKS_DIR,
+        STATE_MANIFEST,
+    )
+
+    alias_dict = alias_dict_df(spark)
+    triples = extract_triples(
+        chunk_repo_files(generate_repo_files(spark, 20))).localCheckpoint()
+    odd = F.pmod(F.xxhash64("document_id"), F.lit(3)) == 0
+    base = triples.where(~odd).localCheckpoint()
+    batch = triples.where(odd).localCheckpoint()
+    assert base.count() > 0 and batch.count() > 0
+    out = str(tmp_path / "g")
+    run_graph_stage(spark, base, alias_dict, out)
+    init_incremental_state(spark, base, alias_dict, out)
+    run_incremental_kg_update(spark, batch, alias_dict, out)
+    assert sorted(os.listdir(out)) == sorted(
+        [*GRAPH_TABLE_DIRS, BLOCKS_DIR, STATE_MANIFEST])
 
 
 def test_staged_edge_write_partition_prunes_its_read(spark, tmp_path):

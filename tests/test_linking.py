@@ -3,6 +3,7 @@ default-row misses, shuffle-free plan (SURVEY.md J1/J5; FIXTURES.md F3)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from deep_reason_spark.datagen import alias_dict_df
@@ -38,6 +39,33 @@ def test_miss_gets_default_row_not_dropped(spark):
     assert not r.linked
     assert r.entity_id.startswith("unk-")
     assert r.canonical_name == "Zzz Qqq"
+
+
+def test_link_score_values(spark):
+    """link_mentions' per-row confidence: prior + 1.0 on a case-insensitive
+    exact match, prior + covered length on a prefix alias, a null prior
+    counted as 0, and 0.0 on a miss."""
+    d = spark.createDataFrame(
+        [
+            ("Ada Lovelace", "e-ada", "Ada Lovelace", 0.5),
+            ("Ada", "e-ada", "Ada Lovelace", 0.5),
+            ("Charles Babbage", "e-cb", "Charles Babbage", None),
+            ("Charles", "e-cb", "Charles Babbage", None),
+        ],
+        "alias string, entity_id string, canonical_name string, prior double",
+    )
+    names = ["Ada Lovelace", "ADA LOVELACE", "Ada", "Charles Babbage",
+             "Charles", "Zzz Qqq"]
+    got = {r.mention: (r.link_score, r.linked)
+           for r in link_mentions(_mentions(spark, names), d).collect()}
+    assert got == {
+        "Ada Lovelace": (1.5, True),               # exact
+        "ADA LOVELACE": (1.5, True),               # case difference
+        "Ada": (0.5 + 3 / 12, True),               # prefix alias
+        "Charles Babbage": (1.0, True),            # exact, null prior
+        "Charles": (pytest.approx(7 / 15), True),  # prefix, null prior
+        "Zzz Qqq": (0.0, False),                   # miss: null canonical
+    }
 
 
 def test_ambiguous_alias_resolved_deterministically(spark):

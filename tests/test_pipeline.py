@@ -159,7 +159,7 @@ def test_worklist_side_job_failure_surfaces_on_empty_worklist(
 
 
 def test_broadcast_guard_is_byte_aware(spark):
-    from deep_reason_spark.plans.kg_pipeline import (
+    from deep_reason_spark.functions.broadcast import (
         broadcast_if_small,
         estimate_bytes,
     )
